@@ -133,41 +133,20 @@ class KnowledgeGraph:
         q.awaitTermination()
 
     def rematerialize(self) -> dict:
-        """Rebuild the graph tables from the accumulated incremental IR."""
-        from kgforge.operators import link, materialize, normalize
+        """Rebuild the graph tables from the accumulated incremental IR
+        (the stream already validated its mentions)."""
+        from kgforge.operators import materialize
+        from kgforge.plans.pipeline import _links, _nodes
 
         ir = f"{self.out_dir}/incremental_ir"
         # batch_id is the stream's idempotence partition key, not IR data
         mentions = self.spark.read.parquet(f"{ir}/mentions").drop("batch_id")
         raw_edges = self.spark.read.parquet(f"{ir}/raw_edges").drop("batch_id")
-        mentions, _ = normalize.validate_attributes(mentions, self.ontology)
         mentions = mentions.persist()
         raw_edges = raw_edges.persist()
-        endpoint_names = (
-            mentions.select("label", "key")
-            .unionByName(
-                raw_edges.select(
-                    F.col("src_label").alias("label"),
-                    F.col("src_key").alias("key"),
-                )
-            )
-            .unionByName(
-                raw_edges.select(
-                    F.col("dst_label").alias("label"),
-                    F.col("dst_key").alias("key"),
-                )
-            )
-        )
-        links = link.link_map(endpoint_names).persist()
-        mentions_c, edges_c = materialize.apply_link_map(
-            mentions, raw_edges, links
-        )
-        key_attr = {
-            label: spec["unique"][0]
-            for label, spec in self._compiled["entities"].items()
-            if spec["unique"]
-        }
-        nodes = materialize.build_nodes(mentions_c, key_attr).localCheckpoint()
+        links = _links(mentions, raw_edges).persist()
+        nodes, edges_c = _nodes(mentions, raw_edges, links, self._key_attr())
+        nodes = nodes.localCheckpoint()
         edges = materialize.build_edges(edges_c, nodes).localCheckpoint()
         nodes.write.mode("overwrite").parquet(self.nodes_path)
         edges.write.mode("overwrite").parquet(self.edges_path)
@@ -210,6 +189,12 @@ class KnowledgeGraph:
         for k in required:
             if k not in attributes:
                 raise ValueError(f"required attribute '{k}' missing on '{label}'")
+
+    def _key_attr(self) -> dict[str, str]:
+        from kgforge.operators.extract import compile_rules
+        from kgforge.plans.pipeline import _key_attr_by_label
+
+        return _key_attr_by_label(compile_rules(self.ontology))
 
     def _node_key(self, label: str, attributes: dict) -> str:
         uniq = self._compiled["entities"][label]["unique"]
@@ -1590,12 +1575,7 @@ class KnowledgeGraph:
     def export_falkordb(self, export_dir: str) -> None:
         from kgforge.sinks.falkordb_export import export_cypher
 
-        key_attr = {
-            label: spec["unique"][0]
-            for label, spec in self._compiled["entities"].items()
-            if spec["unique"]
-        }
-        export_cypher(self.nodes(), self.edges(), key_attr, export_dir)
+        export_cypher(self.nodes(), self.edges(), self._key_attr(), export_dir)
 
     def delete(self) -> None:
         """Drop the graph (kg.py delete parity)."""

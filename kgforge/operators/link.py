@@ -197,7 +197,7 @@ def candidate_pairs(names: DataFrame, max_bucket: int = 10_000) -> DataFrame:
     return scored
 
 
-def link_map(mentions: DataFrame, key_col: str = "key") -> DataFrame:
+def link_map(mentions: DataFrame) -> DataFrame:
     """mentions(label, key, ...) -> (label, key, canon_key) for EVERY distinct
     surface form (identity rows included, so downstream joins are total).
 
@@ -208,7 +208,7 @@ def link_map(mentions: DataFrame, key_col: str = "key") -> DataFrame:
     """
     from kgforge.operators.canon import connected_components
 
-    names = mentions.groupBy("label", F.col(key_col).alias("name")).agg(
+    names = mentions.groupBy("label", F.col("key").alias("name")).agg(
         F.count("*").alias("freq")
     )
     pairs = candidate_pairs(names)
@@ -264,5 +264,5 @@ def link_map(mentions: DataFrame, key_col: str = "key") -> DataFrame:
     )
     return (
         labeled.join(reps, on="component")
-        .select("label", F.col("name").alias(key_col), "canon_key")
+        .select("label", F.col("name").alias("key"), "canon_key")
     )

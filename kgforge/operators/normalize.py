@@ -58,9 +58,7 @@ def filter_to_ontology(
     return mentions_ok, edges_ok
 
 
-def validate_attributes(
-    mentions: DataFrame, onto: Ontology, enforce_required: bool = False
-):
+def validate_attributes(mentions: DataFrame, onto: Ontology):
     """P8: type checks; invalid rows -> quarantine (skip-don't-fail,
     mirroring the reference's per-record try/except at
     extract_data_step.py:177-189).
@@ -72,8 +70,7 @@ def validate_attributes(
     `required` is enforced solely on manual add_node, kg.py:189-297 —
     which kg._validate mirrors). Real pages omit required fields (e.g.
     UFC totals tables with empty cells), and dropping the whole entity
-    would silently lose its other facts. `enforce_required=True` restores
-    the strict curation mode. Returns (valid, quarantined).
+    would silently lose its other facts. Returns (valid, quarantined).
     """
     compiled = onto.compile()["entities"]
     checks = []
@@ -87,10 +84,6 @@ def validate_attributes(
                 bad = bad | (
                     v.isNotNull() & ~F.lower(v).isin("true", "false")
                 )
-        if enforce_required:
-            for attr in spec["required"]:
-                if attr not in spec["unique"]:
-                    bad = bad | F.col("attributes").getItem(attr).isNull()
         checks.append((label, bad))
     bad_expr = F.lit(False)
     for label, bad in checks:

@@ -41,6 +41,7 @@ STAGE_COMPLETE = "stage_complete"
 PARTITION = "partition"
 PARTITION_FOOTER = "partition_footer"
 PARTITION_SCAN = "partition_scan"
+BUCKET_COMPLETE = "bucket_complete"
 
 
 def _footer_counts(path: str) -> dict[str, int] | None:
@@ -68,6 +69,26 @@ def _footer_counts(path: str) -> dict[str, int] | None:
     except Exception:
         return None
     return counts
+
+
+def _counts_by(path: str, key_of) -> dict[int, int] | None:
+    """Footer row counts summed per `key_of(file)` (files keyed None are
+    skipped); None when footers are unreachable."""
+    footer = _footer_counts(path)
+    if footer is None:
+        return None
+    counts: dict[int, int] = {}
+    for p, c in footer.items():
+        k = key_of(p)
+        if k is not None:
+            counts[k] = counts.get(k, 0) + c
+    return counts
+
+
+def _bucket_of(file_path: str) -> int | None:
+    """.../bucket=7/part-... -> 7 (None for an unpartitioned file)."""
+    m = re.search(r"bucket=(\d+)", file_path)
+    return int(m.group(1)) if m else None
 
 
 def _part_index(file_path: str) -> int:
@@ -128,6 +149,26 @@ class RunContext:
         )
         df.coalesce(1).write.mode("append").parquet(self.lineage_dir)
 
+    def _commit(
+        self, name: str, status: str, counts: dict[int, int], total: int,
+        t0: float,
+    ) -> None:
+        """Record a written stage: one `status` counter row per partition
+        or bucket in `counts`, then the stage_complete row carrying `total`
+        (one lineage append); then the injected-failure check."""
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        now = time.time()
+        rows = [
+            (self.run_id, name, pid, c, wall_ms, status, now)
+            for pid, c in sorted(counts.items())
+        ]
+        rows.append(
+            (self.run_id, name, -1, int(total), wall_ms, STAGE_COMPLETE, now)
+        )
+        self._append_lineage(rows)
+        if os.environ.get("KGFORGE_FAIL_AFTER_STAGE") == name:
+            raise RuntimeError(f"injected failure after stage '{name}'")
+
     # ---------------------------------------------------------------- api
     def run_stage(
         self,
@@ -153,17 +194,11 @@ class RunContext:
             n = num_partitions or self.spark.sparkContext.defaultParallelism
             df = df.repartition(n, F.col(repartition_col))
         df.write.mode("overwrite").parquet(path)
-        wall_ms = int((time.monotonic() - t0) * 1000)
 
         out = self.spark.read.parquet(path)
-        footer = _footer_counts(path)
-        if footer is not None:
-            mode = PARTITION_FOOTER
-            per_part: dict[int, int] = {}
-            for p, c in footer.items():
-                idx = _part_index(p)
-                per_part[idx] = per_part.get(idx, 0) + c
-        else:  # metadata unreachable -> the old one-pass scan
+        per_part = _counts_by(path, _part_index)
+        mode = PARTITION_FOOTER
+        if per_part is None:  # metadata unreachable -> the old one-pass scan
             mode = PARTITION_SCAN
             per_part = {
                 int(r["partition_id"]): int(r["count"])
@@ -173,19 +208,7 @@ class RunContext:
                 .count()
                 .collect()
             }
-        now = time.time()
-        rows = [
-            (self.run_id, name, pid, c, wall_ms, mode, now)
-            for pid, c in sorted(per_part.items())
-        ]
-        total = sum(per_part.values())
-        rows.append(
-            (self.run_id, name, -1, int(total), wall_ms, STAGE_COMPLETE, now)
-        )
-        self._append_lineage(rows)
-
-        if os.environ.get("KGFORGE_FAIL_AFTER_STAGE") == name:
-            raise RuntimeError(f"injected failure after stage '{name}'")
+        self._commit(name, mode, per_part, sum(per_part.values()), t0)
         return out
 
     def run_stage_bucketed(
@@ -210,29 +233,25 @@ class RunContext:
         bucket = F.pmod(F.xxhash64(F.col(bucket_col)), F.lit(n_buckets))
         # dynamic partition overwrite emits no root _SUCCESS marker; the
         # lineage stage_complete row alone is the commit record here
-        lin0 = self._lineage_df()
-        if lin0 is not None and not lin0.filter(
-            (F.col("stage") == name) & (F.col("status") == STAGE_COMPLETE)
-        ).isEmpty():
-            return self.spark.read.parquet(path).drop("bucket")
-
         lin = self._lineage_df()
-        done: set[int] = set()
-        if lin is not None:
-            done = {
-                r["partition_id"]
-                for r in lin.filter(
-                    (F.col("stage") == name)
-                    & (F.col("status") == "bucket_complete")
-                ).select("partition_id").collect()
-            }
+        marks = [] if lin is None else (
+            lin.filter(
+                (F.col("stage") == name)
+                & F.col("status").isin(STAGE_COMPLETE, BUCKET_COMPLETE)
+            )
+            .select("status", "partition_id")
+            .collect()
+        )
+        if any(r["status"] == STAGE_COMPLETE for r in marks):
+            return self.spark.read.parquet(path).drop("bucket")
+        done = {r["partition_id"] for r in marks}
         todo = input_df.withColumn("bucket", bucket)
         if done:
             todo = todo.filter(~F.col("bucket").isin(*[int(b) for b in done]))
 
         t0 = time.monotonic()
-        n_new = 0
-        if not todo.isEmpty():
+        wrote = not todo.isEmpty()
+        if wrote:
             out = transform(todo.drop("bucket")).withColumn("bucket", bucket)
             (
                 out.write.mode("overwrite")
@@ -240,9 +259,8 @@ class RunContext:
                 .partitionBy("bucket")
                 .parquet(path)
             )
-            wall_ms = int((time.monotonic() - t0) * 1000)
             try:
-                written = self.spark.read.parquet(path)
+                self.spark.read.parquet(path)
             except AnalysisException:
                 # a dynamic-partitioned write of an EMPTY stage output
                 # leaves no readable footer (unlike plain writes,
@@ -252,50 +270,19 @@ class RunContext:
                 # cost a partial evaluation of the transform on every
                 # non-empty stage too.
                 out.limit(0).write.mode("overwrite").parquet(path)
-                written = self.spark.read.parquet(path)
-            footer = _footer_counts(path)
-            if footer is not None:  # counts from footers, not a re-scan
-                agg: dict[int, int] = {}
-                for p, c in footer.items():
-                    m = re.search(r"bucket=(\d+)", p)
-                    if m:
-                        b = int(m.group(1))
-                        agg[b] = agg.get(b, 0) + c
-                per_bucket = {b: c for b, c in agg.items() if b not in done}
-            else:
-                per_bucket = {
-                    int(r["bucket"]): int(r["count"])
-                    for r in written.groupBy("bucket").count().collect()
-                    if int(r["bucket"]) not in done
-                }
-            now = time.time()
-            rows = [
-                (self.run_id, name, b, c, wall_ms, "bucket_complete", now)
-                for b, c in sorted(per_bucket.items())
-            ]
-            n_new = sum(per_bucket.values())
-            if rows:
-                self._append_lineage(rows)
-
         final = self.spark.read.parquet(path)
-        footer_all = _footer_counts(path)
-        total = (
-            sum(footer_all.values()) if footer_all is not None
-            else final.count()
+        per_bucket = _counts_by(path, _bucket_of)  # footers, not a re-scan
+        if per_bucket is None:
+            per_bucket = {
+                int(r["bucket"]): int(r["count"])
+                for r in final.groupBy("bucket").count().collect()
+            }
+        new = {b: c for b, c in per_bucket.items() if b not in done}
+        self._commit(
+            name, BUCKET_COMPLETE, new if wrote else {},
+            sum(per_bucket.values()), t0,
         )
-        self._append_lineage(
-            [
-                (
-                    self.run_id, name, -1, int(total),
-                    int((time.monotonic() - t0) * 1000),
-                    STAGE_COMPLETE, time.time(),
-                )
-            ]
-        )
-        if os.environ.get("KGFORGE_FAIL_AFTER_STAGE") == name:
-            raise RuntimeError(f"injected failure after stage '{name}'")
-        # the _SUCCESS marker from the last write plus the stage_complete row
-        # make subsequent runs short-circuit entirely
+        # the stage_complete row makes subsequent runs short-circuit
         return final.drop("bucket")
 
     def stage_buckets(self, name: str) -> dict[int, str]:
@@ -307,7 +294,7 @@ class RunContext:
             int(r["partition_id"]): r["run_id"]
             for r in lin.filter(
                 (F.col("stage") == name)
-                & (F.col("status") == "bucket_complete")
+                & (F.col("status") == BUCKET_COMPLETE)
             ).select("partition_id", "run_id").collect()
         }
 

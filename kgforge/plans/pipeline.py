@@ -10,8 +10,14 @@ serial DB round-trips per document — with a staged DataFrame dataflow:
       --J8 LSH linking + J9 CC--> link map
       --A1/A2 dedup + J1 resolution--> nodes, edges --> triples
 
-Every stage commits to parquet with lineage (plans/lineage.py), so a rerun
-resumes after the last complete stage. Stage boundaries are the checkpoints.
+Each step is defined once, as a private function below (`_text`, `_ir`,
+`_normalize`, `_links`, `_nodes`, `_key_attr_by_label`). Every composition
+calls them: `run_pipeline` commits each stage to parquet with lineage
+(plans/lineage.py), so a rerun resumes after the last complete stage;
+`build_graph` runs the same sequence with `persist()` in place of commits;
+`KnowledgeGraph.rematerialize` and the streaming face
+(streaming/incremental.py) call the same functions. The compositions agree
+because they share the code, not because it was copied.
 
 Scale notes (SURVEY §4): the `html` column dies at the first stage; text
 stages repartition on url_host (bucket analogue); linking joins key on
@@ -22,6 +28,8 @@ available in operators/skew.py for the heavy-hitter node ids.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,87 +39,119 @@ from kgforge.plans.lineage import RunContext
 from kgforge.sources.html import extract_text_udf
 
 
-def _text_expr(df: DataFrame, reuse_text_col: bool):
-    """The stage-01 text column: bs4-parity extraction from `html` when the
-    page has html (the byte-identical-per-url invariant); pages without
-    html (text-only loaders, pre-extracted corpora) keep their `text`.
-    `reuse_text_col=True` skips the UDF entirely when a trusted text column
-    exists (benchmark/entry paths)."""
-    if reuse_text_col and "text" in df.columns:
-        return F.col("text")
-    extracted = extract_text_udf(F.col("html"))
-    if "text" in df.columns:
-        return (
-            F.when(F.col("html").isNotNull(), extracted)
-            .otherwise(F.col("text"))
-            .alias("text")
-        )
-    return extracted.alias("text")
-
-
-def build_graph(
-    spark: SparkSession,
-    pages: DataFrame,
-    onto: Ontology,
-    lang_filter: list[str] | None = None,
-    reuse_text_col: bool = False,
-    wrappers: list | None = None,
-) -> dict:
-    """Pure-DataFrame composition of the pipeline (no checkpointing).
-
-    Used by `entry()` smoke paths and micro-benchmarks; `run_pipeline` is the
-    production staged/resumable variant with identical semantics.
-
-    `wrappers` (operators/wrappers.py specs) enables layout-template
-    extraction; because template wrappers read DOM structure, the `html`
-    column then rides THROUGH the text stage into the extraction UDF
-    instead of dying at stage 1 (the no-wrapper default keeps the
-    html-dies-early column-pruning contract).
-    """
-    rules = extract.compile_rules(onto)
-    key_attr_by_label = {
+# ------------------------------------------------------------ stages
+def _key_attr_by_label(rules: dict) -> dict[str, str]:
+    """label -> the unique attribute that carries the node key."""
+    return {
         label: spec["key_attr"]
         for label, spec in rules["entities"].items()
         if spec["key_attr"]
     }
-    df = pages
+
+
+def _text(
+    pages: DataFrame,
+    lang_filter: list[str] | None = None,
+    wrappers: list | None = None,
+) -> DataFrame:
+    """pages -> (url, warc_ts, text, lang[, html]).
+
+    bs4-parity extraction from `html` when the page has html (the
+    byte-identical-per-url invariant); pages without html (text-only
+    loaders, pre-extracted corpora) keep their `text`. Template wrappers
+    read DOM structure, so with `wrappers` the `html` column rides through
+    to the extraction UDF instead of dying here."""
     if lang_filter:
-        df = df.filter(F.col("lang").isin(lang_filter))
+        pages = pages.filter(F.col("lang").isin(lang_filter))
+    text = extract_text_udf(F.col("html"))
+    if "text" in pages.columns:
+        text = F.when(F.col("html").isNotNull(), text).otherwise(F.col("text"))
     html_keep = ["html"] if wrappers else []
-    text_df = df.select(
-        "url", "warc_ts", _text_expr(df, reuse_text_col), "lang", *html_keep
-    )
-    # persist at the Python-UDF boundary: IR feeds both explode branches and
-    # every downstream consumer — without this the bs4+extraction UDF chain
-    # re-runs once per consumer (the single biggest wall-clock factor here)
-    ir_df = extract.extract_ir(
+    return pages.select("url", "warc_ts", text.alias("text"), "lang", *html_keep)
+
+
+def _ir(text_df: DataFrame, rules: dict, wrappers: list | None = None):
+    """text -> extraction IR (document-local coreference happens inside the
+    extraction UDF: extract._resolve_local_aliases — zero extra stages)."""
+    return extract.extract_ir(
         text_df,
         rules,
         keep_cols=["url", "warc_ts"],
         wrappers=wrappers,
         html_col="html" if wrappers else None,
-    ).persist()
-    # (document-local coreference happens inside the extraction UDF:
-    # extract._resolve_local_aliases — zero extra stages)
-    mentions, raw_edges = extract.explode_ir(ir_df)
-    mentions = normalize.sanitize_mentions(mentions)
-    raw_edges = normalize.sanitize_edges(raw_edges)
-    mentions, raw_edges = normalize.filter_to_ontology(
-        mentions, raw_edges, onto, spark
     )
-    mentions, _quar = normalize.validate_attributes(mentions, onto)
+
+
+def _normalize(ir_df: DataFrame, onto: Ontology):
+    """IR -> (valid mentions, quarantined mentions, raw edges): explode,
+    sanitize, keep what the ontology declares, type-check attributes."""
+    mentions, raw_edges = extract.explode_ir(ir_df)
+    mentions, raw_edges = normalize.filter_to_ontology(
+        normalize.sanitize_mentions(mentions),
+        normalize.sanitize_edges(raw_edges),
+        onto,
+        ir_df.sparkSession,
+    )
+    valid, quarantine = normalize.validate_attributes(mentions, onto)
+    return valid, quarantine, raw_edges
+
+
+def _links(mentions: DataFrame, raw_edges: DataFrame) -> DataFrame:
+    """Link map over every name a node or an edge endpoint uses."""
+    names = mentions.select("label", "key")
+    for side in ("src", "dst"):
+        names = names.unionByName(
+            raw_edges.select(
+                F.col(f"{side}_label").alias("label"),
+                F.col(f"{side}_key").alias("key"),
+            )
+        )
+    return link.link_map(names)
+
+
+def _nodes(
+    mentions: DataFrame,
+    raw_edges: DataFrame,
+    links: DataFrame,
+    key_attr_by_label: dict[str, str],
+):
+    """-> (nodes, link-resolved raw edges). Callers build the edges with
+    `materialize.build_edges` against their committed copy of the nodes."""
+    mentions_c, edges_c = materialize.apply_link_map(mentions, raw_edges, links)
+    return materialize.build_nodes(mentions_c, key_attr_by_label), edges_c
+
+
+# ------------------------------------------------------ compositions
+def build_graph(
+    spark: SparkSession,
+    pages: DataFrame,
+    onto: Ontology,
+    lang_filter: list[str] | None = None,
+    wrappers: list | None = None,
+) -> dict:
+    """In-memory composition of the pipeline (no checkpointing).
+
+    Used by `entry()` smoke paths and micro-benchmarks; `run_pipeline` is
+    the production staged/resumable variant over the same stage functions.
+    `wrappers` (operators/wrappers.py specs) enables layout-template
+    extraction.
+    """
+    rules = extract.compile_rules(onto)
+    text_df = _text(pages, lang_filter, wrappers)
+    # persist at the Python-UDF boundary: IR feeds both explode branches and
+    # every downstream consumer — without this the bs4+extraction UDF chain
+    # re-runs once per consumer (the single biggest wall-clock factor here)
+    ir_df = _ir(text_df, rules, wrappers).persist()
+    mentions, _quarantine, raw_edges = _normalize(ir_df, onto)
     mentions = mentions.persist()
     raw_edges = raw_edges.persist()
-    endpoint_names = mentions.select("label", "key").unionByName(
-        raw_edges.select(F.col("src_label").alias("label"), F.col("src_key").alias("key"))
-    ).unionByName(
-        raw_edges.select(F.col("dst_label").alias("label"), F.col("dst_key").alias("key"))
-    )
     # link_map's CC fixpoint runs eagerly (localCheckpoint per iteration);
     # its output is consumed once per endpoint side — persist the small map
-    links = link.link_map(endpoint_names).persist()
-    mentions_c, edges_c = materialize.apply_link_map(mentions, raw_edges, links)
-    nodes = materialize.build_nodes(mentions_c, key_attr_by_label).persist()
+    links = _links(mentions, raw_edges).persist()
+    nodes, edges_c = _nodes(
+        mentions, raw_edges, links, _key_attr_by_label(rules)
+    )
+    nodes = nodes.persist()
     edges = materialize.build_edges(edges_c, nodes)
     triples = materialize.triples_view(edges)
     persisted = [ir_df, mentions, raw_edges, links, nodes]
@@ -145,7 +185,6 @@ def run_pipeline(
     out_dir: str,
     run_id: str | None = None,
     lang_filter: list[str] | None = None,
-    reuse_text_col: bool = False,
     wrappers: list | None = None,
 ) -> dict:
     """Run (or resume) the full pipeline; returns dict of output DataFrames.
@@ -160,61 +199,34 @@ def run_pipeline(
         else RunContext(spark, out_dir)
     )
     rules = extract.compile_rules(onto)
-    key_attr_by_label = {
-        label: spec["key_attr"]
-        for label, spec in rules["entities"].items()
-        if spec["key_attr"]
-    }
-
-    # ---- stage 1: text extraction (M0) --------------------------------
-    def build_text():
-        df = pages
-        if lang_filter:
-            df = df.filter(F.col("lang").isin(lang_filter))
-        html_keep = ["html"] if wrappers else []
-        out = df.select(
-            "url", "warc_ts", _text_expr(df, reuse_text_col), "lang",
-            *html_keep,
-        )
-        return out.withColumn("url_host", F.parse_url("url", F.lit("HOST")))
 
     # repartition on full url, not url_host: extraction is per-row, and a
     # Zipf-headed host would put most of the corpus in one partition (the
     # lineage counters showed a 20x spread at 5k pages). url_host stays as a
     # column for host-bucketed table layouts downstream.
-    text_df = ctx.run_stage("01_text", build_text, repartition_col="url")
+    text_df = ctx.run_stage(
+        "01_text",
+        lambda: _text(pages, lang_filter, wrappers).withColumn(
+            "url_host", F.parse_url("url", F.lit("HOST"))
+        ),
+        repartition_col="url",
+    )
 
-    # ---- stage 2: extraction IR (M2) ----------------------------------
     # bucket-granular resume: the most expensive stage only recomputes url
     # buckets whose lineage never committed after a mid-stage crash
     ir_df = ctx.run_stage_bucketed(
         "02_ir",
         text_df,
-        lambda df: extract.extract_ir(
-            df,
-            rules,
-            keep_cols=["url", "warc_ts"],
-            wrappers=wrappers,
-            html_col="html" if wrappers else None,
-        ),
+        lambda df: _ir(df, rules, wrappers),
         bucket_col="url",
         n_buckets=64,
     )
 
-    # ---- stage 3: flatten + normalize + validate ----------------------
-    # (document-local coreference already ran inside the extraction UDF)
-    def _flat():
-        mentions, raw_edges = extract.explode_ir(ir_df)
-        mentions = normalize.sanitize_mentions(mentions)
-        raw_edges = normalize.sanitize_edges(raw_edges)
-        return mentions, raw_edges
+    # stages 03/04 share one normalize plan, built only when either runs
+    normalized = functools.cache(lambda: _normalize(ir_df, onto))
 
     def build_mentions():
-        mentions, raw_edges = _flat()
-        mentions, _edges_unused = normalize.filter_to_ontology(
-            mentions, raw_edges, onto, spark
-        )
-        valid, quarantine = normalize.validate_attributes(mentions, onto)
+        valid, quarantine, _ = normalized()
         # skip-don't-fail with a durable record (the reference logs skipped
         # records per task, extract_data_step.py:177-189): invalid rows land
         # in a quarantine table instead of vanishing
@@ -223,52 +235,25 @@ def run_pipeline(
         )
         return valid
 
-    def build_raw_edges():
-        mentions, raw_edges = _flat()
-        _m, edges_ok = normalize.filter_to_ontology(
-            mentions, raw_edges, onto, spark
-        )
-        return edges_ok
-
     mentions_df = ctx.run_stage("03_mentions", build_mentions)
-    raw_edges_df = ctx.run_stage("04_raw_edges", build_raw_edges)
+    raw_edges_df = ctx.run_stage("04_raw_edges", lambda: normalized()[2])
+    links_df = ctx.run_stage(
+        "05_links", lambda: _links(mentions_df, raw_edges_df)
+    )
 
-    # ---- stage 4: entity linking (M4: J8 + J9) ------------------------
-    def build_links():
-        endpoint_names = mentions_df.select("label", "key").unionByName(
-            raw_edges_df.select(
-                F.col("src_label").alias("label"), F.col("src_key").alias("key")
-            )
-        ).unionByName(
-            raw_edges_df.select(
-                F.col("dst_label").alias("label"), F.col("dst_key").alias("key")
-            )
+    # stages 06/07 share one link-map application
+    resolved = functools.cache(
+        lambda: _nodes(
+            mentions_df, raw_edges_df, links_df, _key_attr_by_label(rules)
         )
-        return link.link_map(endpoint_names)
-
-    links_df = ctx.run_stage("05_links", build_links)
-
-    # ---- stage 5: materialize (A1/A2 + J1 + S8/S9) --------------------
-    def build_nodes():
-        mentions_c, _ = materialize.apply_link_map(
-            mentions_df, raw_edges_df, links_df
-        )
-        return materialize.build_nodes(mentions_c, key_attr_by_label)
-
-    nodes_df = ctx.run_stage("06_nodes", build_nodes)
-
-    def build_edges():
-        _, edges_c = materialize.apply_link_map(
-            mentions_df, raw_edges_df, links_df
-        )
-        return materialize.build_edges(edges_c, nodes_df)
-
-    edges_df = ctx.run_stage("07_edges", build_edges)
-
-    def build_triples():
-        return materialize.triples_view(edges_df)
-
-    triples_df = ctx.run_stage("08_triples", build_triples)
+    )
+    nodes_df = ctx.run_stage("06_nodes", lambda: resolved()[0])
+    edges_df = ctx.run_stage(
+        "07_edges", lambda: materialize.build_edges(resolved()[1], nodes_df)
+    )
+    triples_df = ctx.run_stage(
+        "08_triples", lambda: materialize.triples_view(edges_df)
+    )
 
     # S10: the ontology rides with the graph it constrained — the engine's
     # analogue of the reference's MERGE-per-meta-node save
@@ -286,4 +271,3 @@ def run_pipeline(
         "edges": edges_df,
         "triples": triples_df,
     }
-

@@ -91,7 +91,9 @@ def prune_files(spark: SparkSession, path: str, value) -> list[str]:
         side.filter(F.col("bit").isin(addrs))
         .groupBy("file")
         .agg(F.count_distinct("bit").alias("nh"))
-        .filter(F.col("nh") == params["k"])
+        # k addresses can collide mod m_bits: a file holding the value
+        # sets only the DISTINCT ones
+        .filter(F.col("nh") == len(set(addrs)))
         .select("file")
         .collect()
     )

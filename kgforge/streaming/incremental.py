@@ -5,9 +5,10 @@ The reference's only incrementality is "call `process_sources` again"
 set that dies on restart (kg.py:58). The engine's streaming face:
 
 - `stream_extract`: `readStream` (file source over the pages directory) ->
-  `foreachBatch` running the SAME batch stage functions (text UDF +
-  extraction IR + explode/normalize) and appending mentions/raw_edges
-  parquet. The file-source + checkpoint pair replaces the in-memory set:
+  `foreachBatch` calling the batch pipeline's own stage functions
+  (plans/pipeline.py `_text` -> `_ir` -> `_normalize`) and appending
+  mentions/raw_edges parquet, so a page yields the same mentions streamed
+  or batched. The file-source + checkpoint pair replaces the in-memory set:
   restart resumes from the checkpoint, each file processed exactly once.
 - graph materialization (linking/CC/dedup) stays a periodic batch job over
   the accumulated IR — matching the reference's semantics, where MERGE
@@ -30,8 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgforge.ontology import Ontology
-from kgforge.operators import extract, normalize
-from kgforge.sources.html import extract_text_udf
+from kgforge.operators import extract
+from kgforge.plans.pipeline import _ir, _normalize, _text
 
 
 def stream_extract(
@@ -51,8 +52,8 @@ def stream_extract(
     counts (which link_map's canonical-name choice weighs) stay exact.
 
     Returns the StreamingQuery (caller awaits termination). Each micro-batch
-    runs the identical batch-stage composition, so batch/stream parity is
-    structural, not re-implemented.
+    calls the batch pipeline's text, IR and normalize functions; mentions
+    that fail attribute validation are dropped, as `build_graph` drops them.
     """
     rules = extract.compile_rules(onto)
     schema = (
@@ -65,29 +66,8 @@ def stream_extract(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int):
-        html_keep = ["html"] if wrappers else []
-        text_df = batch_df.select(
-            "url",
-            "warc_ts",
-            F.coalesce(
-                "text", extract_text_udf(F.col("html"))
-            ).alias("text"),
-            "lang",
-            *html_keep,
-        )
-        ir = extract.extract_ir(
-            text_df,
-            rules,
-            keep_cols=["url", "warc_ts"],
-            wrappers=wrappers,
-            html_col="html" if wrappers else None,
-        )
-        mentions, raw_edges = extract.explode_ir(ir)
-        mentions = normalize.sanitize_mentions(mentions)
-        raw_edges = normalize.sanitize_edges(raw_edges)
-        mentions, raw_edges = normalize.filter_to_ontology(
-            mentions, raw_edges, onto, batch_df.sparkSession
-        )
+        ir = _ir(_text(batch_df, wrappers=wrappers), rules, wrappers)
+        mentions, _quarantine, raw_edges = _normalize(ir, onto)
         for df, sub in ((mentions, "mentions"), (raw_edges, "raw_edges")):
             (
                 df.withColumn("batch_id", F.lit(batch_id))

@@ -78,3 +78,19 @@ def test_unindexed_files_are_kept(spark, tmp_path):
     extra.coalesce(1).write.mode("append").parquet(path)
     got = read_pruned(spark, path, "user_id", "late-user").collect()
     assert len(got) == 1 and got[0].user_id == "late-user"
+
+
+def test_colliding_bit_addresses_keep_the_file(spark, tmp_path):
+    """A value whose k addresses collide mod m_bits sets fewer than k
+    distinct bits; the file holding it must still be kept (requiring k
+    distinct hits would prune it — a false negative)."""
+    m_bits, k = 16, 4
+    value = next(
+        v for v in (f"u{i}" for i in range(200))
+        if len(set(_bit_addrs(v, k, m_bits))) < k
+    )
+    path = str(tmp_path / "tbl_collide")
+    _write_corpus(spark, path, n_files=4)
+    build_file_blooms(spark, path, "user_id", m_bits=m_bits, k=k)
+    got = read_pruned(spark, path, "user_id", value).collect()
+    assert len(got) == 1 and got[0].user_id == value

@@ -117,7 +117,7 @@ def test_validate_attributes_quarantine(spark):
 def test_missing_required_attr_kept_by_default(spark):
     """Reference parity: the extraction path writes records missing a
     required (non-unique) attribute — only manual add_node enforces
-    `required`. Strict curation mode is opt-in."""
+    `required`."""
     from kgforge.ontology import Attribute, Entity, Ontology
 
     onto = Ontology(
@@ -140,11 +140,6 @@ def test_missing_required_attr_kept_by_default(spark):
     valid, quar = normalize.validate_attributes(mentions, onto)
     assert sorted(r["key"] for r in valid.collect()) == ["A", "B"]
     assert quar.count() == 0
-    strict_valid, strict_quar = normalize.validate_attributes(
-        mentions, onto, enforce_required=True
-    )
-    assert [r["key"] for r in strict_valid.collect()] == ["A"]
-    assert [r["key"] for r in strict_quar.collect()] == ["B"]
 
 
 # ---------------------------------------------------------------------

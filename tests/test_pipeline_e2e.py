@@ -5,7 +5,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from kgforge.plans.pipeline import run_pipeline
+from kgforge.plans.pipeline import build_graph, run_pipeline
 from kgforge.sources.pages import (
     corpus_to_spark,
     generate_corpus,
@@ -70,6 +70,15 @@ def test_e2e_pr_gate(spark, corpus, workdir):
     n_nodes = out["nodes"].count()
     n_distinct = out["nodes"].select("label", "key").distinct().count()
     assert n_nodes == n_distinct
+
+    # the in-memory build composes the same stages: same graph
+    mem = build_graph(spark, pages, movies_ontology())
+    assert _triples_set(mem["triples"]) == pred
+    assert {
+        (r["label"], r["key"])
+        for r in mem["nodes"].select("label", "key").collect()
+    } == got_nodes
+    mem["unpersist"]()
 
 
 def test_determinism_two_runs(spark, corpus, tmp_path):

@@ -50,23 +50,56 @@ def test_stream_matches_batch_and_is_exactly_once(spark, corpus, workdir):
     q.awaitTermination(120)
     assert spark.read.parquet(f"{out_dir}/mentions").count() == n2
 
-    # parity with the batch path on the same pages
-    from kgforge.operators import extract, normalize
-
+    # parity with the batch pipeline's own stage functions on the same pages
     batch_pages = spark.read.parquet(f"{pages_dir}/c1", f"{pages_dir}/c2")
-    rules = extract.compile_rules(onto)
-    text_df = batch_pages.select(
-        "url", "warc_ts", F.coalesce("text").alias("text"), "lang"
-    )
-    ir = extract.extract_ir(text_df, rules, keep_cols=["url", "warc_ts"])
-    m_batch, e_batch = extract.explode_ir(ir)
-    m_batch = normalize.sanitize_mentions(m_batch)
-    m_batch, _ = normalize.filter_to_ontology(m_batch, e_batch, onto, spark)
+    m_batch = _batch_mentions(batch_pages, onto)
 
     key = ["url", "label", "key"]
     assert {tuple(r) for r in m_stream.select(*key).collect()} == {
         tuple(r) for r in m_batch.select(*key).collect()
     }
+
+
+def _batch_mentions(pages, onto):
+    from kgforge.operators import extract
+    from kgforge.plans.pipeline import _ir, _normalize, _text
+
+    rules = extract.compile_rules(onto)
+    mentions, _quarantine, _edges = _normalize(_ir(_text(pages), rules), onto)
+    return mentions
+
+
+def test_stream_text_comes_from_html_like_batch(spark, workdir):
+    """A page whose stored `text` disagrees with its `html`: the batch
+    path extracts from html whenever it is present, and the stream must
+    do the same instead of trusting the stored text."""
+    import datetime as dt
+
+    onto = movies_ontology()
+    html = (
+        b"<html><body><p>Rosa Xu is a Person.</p>"
+        b"<p>Rosa Xu directed The Quarry.</p></body></html>"
+    )
+    pages = spark.createDataFrame(
+        [("https://h/q", dt.datetime(2024, 1, 1), html, "", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    pages_dir = f"{workdir}/pages_text"
+    pages.coalesce(1).write.parquet(f"{pages_dir}/c1")
+    out_dir = f"{workdir}/text_out"
+    q = stream_extract(spark, pages_dir, onto, out_dir, f"{workdir}/ck_text")
+    q.awaitTermination(120)
+
+    key = ["url", "label", "key"]
+    streamed = {
+        tuple(r)
+        for r in spark.read.parquet(f"{out_dir}/mentions").select(*key).collect()
+    }
+    batch = {
+        tuple(r) for r in _batch_mentions(pages, onto).select(*key).collect()
+    }
+    assert ("https://h/q", "Person", "Rosa Xu") in batch
+    assert streamed == batch
 
 
 def test_batch_replay_is_idempotent(spark, corpus, workdir):
